@@ -2,9 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-/** Dev scratch main: with no args, environment smoke checks; with
-  * `<sfDir> <outDir> name...`, a filtered Verify (only the named
-  * queries) for fast oracle iteration via tools/selfcheck.py.
+/** Dev scratch main: with no args (or just an SF dir), a load smoke
+  * check of every table; `dump-oracles <outFile>` writes the registry's
+  * oracle SQL without running a query; the `profile-*`, `explain-inc`,
+  * `bench-md5` and `dump-plans` modes are one-off profiling probes. For
+  * a fast oracle check of a few queries, run
+  * `graft.Verify <sfDir> <outDir> name...` and then tools/selfcheck.py.
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
@@ -28,33 +31,7 @@ object Scratch {
       return
     }
     val spark = SparkUtil.local()
-    if (args.length >= 3 && !args(0).startsWith("profile-") &&
-        !args(0).startsWith("dump-")) {
-      val sfDir = args(0); val outDir = args(1); val names = args.drop(2).toSet
-      new java.io.File(outDir).mkdirs()
-      SparkEntry.queries.filter(kv => names.contains(kv._1)).foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-          println(f"[scratch] $name ok in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        } catch { case e: Throwable =>
-          println(s"[scratch] $name FAILED: ${e.getMessage}")
-          e.printStackTrace()
-        }
-      }
-      def q(s: String): String = "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case '\r' => "\\r"
-        case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-      val json = SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    } else if (args.headOption.contains("profile-recall")) {
+    if (args.headOption.contains("profile-recall")) {
       // Measured recall of the approximate family vs exact ground
       // truth, at the given SF (the driver ships sf0.1 as its largest).
       //  - ANN (q_l6 LSH / q_l12 IVF): recall@5 against the exact
@@ -448,96 +425,6 @@ object Scratch {
         graft.app.Pipeline.incrementalBatch(dwh1, b2, "2026-08-03")
           .fact.groupBy("load_month", "date_id").agg(count(lit(1)).as("n_facts"))
           .write.format("noop").mode("overwrite").save())
-    } else if (args.headOption.contains("profile-asof")) {
-      // composed union+window vs native sort-merge vs native broadcast
-      // as-of on PLANTED data larger than the testdata: `nLeft` left
-      // rows over `nKeys` keys, `nRight` right history rows. All three
-      // must return identical match counts; wall times show where each
-      // physical form wins.
-      import org.apache.spark.sql.functions._
-      val nLeft = args.lift(1).map(_.toLong).getOrElse(4000000L)
-      val nRight = args.lift(2).map(_.toLong).getOrElse(200000L)
-      val nKeys = args.lift(3).map(_.toLong).getOrElse(100000L)
-      val base = java.sql.Timestamp.valueOf("2026-01-01 00:00:00").getTime
-      def mk(n: Long, salt: Int) = spark.range(n).select(
-        pmod(xxhash64(col("id") + salt), lit(nKeys)).as("user_id"),
-        timestamp_millis(lit(base) +
-          pmod(xxhash64(col("id") * 7 + salt), lit(86400000L * 30))).as("ts"))
-      val left = mk(nLeft, 1).localCheckpoint()
-      val right = mk(nRight, 2).withColumn("payload", col("user_id") * 10)
-        .localCheckpoint()
-      def t(what: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-        for (pass <- 1 to 3) {
-          val t0 = System.nanoTime()
-          val n = df.agg(count(col("asof_payload")).as("n")).collect()(0).getLong(0)
-          println(f"[profile] $what pass$pass: ${(System.nanoTime() - t0) / 1e9}%.2f s (matched=$n)")
-        }
-      }
-      def conf(k: String, v: String) = spark.conf.set(k, v)
-      t("composed union+window")(graft.operators.AsOfJoin.joinAsOfBackward(
-        left, right, Seq("user_id"), "ts", "ts", Seq("payload")))
-      conf("spark.sql.autoBroadcastJoinThreshold", "-1")
-      t("native sort-merge")(graft.plans.NativeAsOfJoin.joinAsOfBackward(
-        left, right, Seq("user_id"), "ts", "ts", Seq("payload")))
-      conf("spark.sql.autoBroadcastJoinThreshold", "512MB")
-      t("native broadcast")(graft.plans.NativeAsOfJoin.joinAsOfBackward(
-        left, right, Seq("user_id"), "ts", "ts", Seq("payload")))
-      conf("spark.sql.autoBroadcastJoinThreshold", "10MB")
-    } else if (args.headOption.contains("profile-asof-skew")) {
-      // the r9 profile-asof used UNIFORM keys; this is the hot-key
-      // layout the sort-merge form's caveat warns about. Keys follow a
-      // power law (key = ⌊nKeys·u⁴⌋ for u ~ U[0,1)): ~5-6% of all left
-      // rows land on key 0, so the co-partitioned sort-merge serializes
-      // that key's merge in one task, while the broadcast form (left
-      // side never exchanged) and the salted composed form spread it.
-      // Max per-pass task time is printed alongside wall — the skew
-      // signature is one straggler task owning the wall clock.
-      import org.apache.spark.sql.functions._
-      val nLeft = args.lift(1).map(_.toLong).getOrElse(4000000L)
-      val nRight = args.lift(2).map(_.toLong).getOrElse(200000L)
-      val nKeys = args.lift(3).map(_.toLong).getOrElse(100000L)
-      val sc = spark.sparkContext
-      val maxTaskMs = new java.util.concurrent.atomic.AtomicLong
-      sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskInfo != null)
-            maxTaskMs.getAndUpdate(m => math.max(m, t.taskInfo.duration))
-      })
-      val base = java.sql.Timestamp.valueOf("2026-01-01 00:00:00").getTime
-      def mk(n: Long, salt: Int, skewed: Boolean) = {
-        val u = pmod(xxhash64(col("id") + salt), lit(1000000L)) / lit(1000000.0)
-        val key =
-          if (skewed) floor(lit(nKeys.toDouble) * pow(u, lit(4.0))).cast("long")
-          else pmod(xxhash64(col("id") + salt), lit(nKeys))
-        spark.range(n).select(key.as("user_id"),
-          timestamp_millis(lit(base) +
-            pmod(xxhash64(col("id") * 7 + salt), lit(86400000L * 30))).as("ts"))
-      }
-      val left = mk(nLeft, 1, skewed = true).localCheckpoint()
-      val right = mk(nRight, 2, skewed = true)
-        .withColumn("payload", col("user_id") * 10).localCheckpoint()
-      println(s"[profile] hot-key mass: " + left.groupBy("user_id").count()
-        .orderBy(col("count").desc).limit(3).collect().mkString(", "))
-      def t(what: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-        for (pass <- 1 to 3) {
-          maxTaskMs.set(0)
-          val t0 = System.nanoTime()
-          val n = df.agg(count(col("asof_payload")).as("n")).collect()(0).getLong(0)
-          println(f"[profile] $what pass$pass: ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-            f"maxTask=${maxTaskMs.get / 1000.0}%.2f s (matched=$n)")
-        }
-      }
-      def conf(k: String, v: String) = spark.conf.set(k, v)
-      conf("spark.sql.autoBroadcastJoinThreshold", "-1")
-      t("native sort-merge (skewed)")(graft.plans.NativeAsOfJoin.joinAsOfBackward(
-        left, right, Seq("user_id"), "ts", "ts", Seq("payload")))
-      conf("spark.sql.autoBroadcastJoinThreshold", "512MB")
-      t("native broadcast (skewed)")(graft.plans.NativeAsOfJoin.joinAsOfBackward(
-        left, right, Seq("user_id"), "ts", "ts", Seq("payload")))
-      conf("spark.sql.autoBroadcastJoinThreshold", "-1")
-      t("composed salted (skewed)")(graft.operators.AsOfJoin.joinAsOfBackwardSalted(
-        left, right, Seq("user_id"), "ts", "ts", Seq("payload"), saltBuckets = 16))
-      conf("spark.sql.autoBroadcastJoinThreshold", "10MB")
     } else {
       val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
       for (t <- Tables.all) {

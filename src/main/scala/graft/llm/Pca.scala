@@ -79,7 +79,11 @@ object Pca {
       .select(posexplode(e).as(Seq("j0", "x")))
       .groupBy("j0")
       .agg((sum(col("x").cast(DecimalType(25, 10))).cast("double") / count(lit(1))).as("m"))
-      .collect().map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1) // bounded: ≤ |dim| rows
+      .collect().map { r => // bounded: ≤ |dim| rows
+        require(!r.isNullAt(1),
+          s"$embCol: dimension ${r.getInt(0) + 1} has no non-null values, its mean is undefined")
+        (r.getInt(0), r.getDouble(1))
+      }.sortBy(_._1)
     val mArr = array(mRows.map(t => lit(t._2)): _*)
     wide
       .select(zip_with(e, mArr, (x, mm) => x - mm).as("cx"))
@@ -126,7 +130,9 @@ object Pca {
     *
     * Contract (ADVICE r14 mmrSelectLocal note, applied here from the
     * start): `cells` must be the dense d×d grid with non-null doubles
-    * — covariance() produces exactly that by construction.
+    * — covariance() produces exactly that by construction; an empty
+    * corpus or a `dim` below the embedding width fails the `require`
+    * instead of a map-lookup crash.
     */
   def topComponent(
       emb: DataFrame, idCol: String, embCol: String, dim: Int, iters: Int): DataFrame = {
@@ -145,6 +151,9 @@ object Pca {
     }
     val cells = covariance(emb, idCol, embCol)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))) // bounded: ≤ |dim|² rows
+    require(cells.nonEmpty && cells.forall { case (ci, cj, _) => ci <= dim && cj <= dim },
+      s"$embCol: covariance grid must be non-empty with every index <= dim=$dim " +
+        s"(got ${cells.length} cells)")
     var v: Map[Int, Double] = (1 to dim).map(j => j -> pcInit(j)).toMap
     var nrm = 0.0
     var it = 0

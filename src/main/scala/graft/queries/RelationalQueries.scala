@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.plans.NativeAsOfJoin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,6 +30,75 @@ object RelationalQueries {
 
   /** round(dsum/cnt, 6) — deterministic average. */
   private def davg(c: Column): Column = round(dsum(c) / count(lit(1)), 6)
+
+  /** The W4 scenario's two event streams: (purchases, views), each as
+    * (user_id, ts).
+    */
+  private def purchasesAndViews(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val ev = Tables.events(s, dir)
+    def of(t: String) = ev.filter(col("event_type") === t).select("user_id", "ts")
+    (of("purchase"), of("view"))
+  }
+
+  /** Backward as-of body of q_w4 / q_w4d (and q_w4b with
+    * `saltBuckets` > 1): each purchase looks up the user's most recent
+    * view at-or-before it; per-day match counts and mean gap.
+    */
+  private def purchaseViewGaps(
+      s: SparkSession, dir: String, saltBuckets: Int = 1): DataFrame = {
+    val (p, v) = purchasesAndViews(s, dir)
+    val joined =
+      if (saltBuckets > 1)
+        NativeAsOfJoin.joinAsOfBackwardSalted(
+          p, v, Seq("user_id"), "ts", "ts", Seq("ts"), saltBuckets = saltBuckets)
+      else NativeAsOfJoin.joinAsOfBackward(p, v, Seq("user_id"), "ts", "ts", Seq("ts"))
+    joined
+      .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
+      .agg(count(lit(1)).as("n_purchases"),
+        count(col("asof_ts")).as("n_matched"),
+        round(avg(unix_micros(col("ts")) - unix_micros(col("asof_ts"))) / 1e6, 6)
+          .as("avg_gap_sec"))
+      .orderBy("day")
+  }
+
+  /** Forward as-of body of q_w4c / q_w4e: each view looks up the
+    * user's next purchase at-or-after it; per-day conversions and mean
+    * gap.
+    */
+  private def viewConversionGaps(s: SparkSession, dir: String): DataFrame = {
+    val (p, v) = purchasesAndViews(s, dir)
+    NativeAsOfJoin.joinAsOfForward(v, p, Seq("user_id"), "ts", "ts", Seq("ts"))
+      .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
+      .agg(count(lit(1)).as("n_views"),
+        count(col("asof_ts")).as("n_converted"),
+        round(avg(unix_micros(col("asof_ts")) - unix_micros(col("ts"))) / 1e6, 6)
+          .as("avg_gap_sec"))
+      .orderBy("day")
+  }
+
+  /** Point-in-time body of q_j12 / q_j12b: each purchase opens a tier
+    * version valid until the next purchase or 7 days, whichever first;
+    * every view reads the tier current at view time ('none' when
+    * expired or before any purchase).
+    */
+  private def viewTiers(s: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(s, dir)
+    val wNext = Window.partitionBy("user_id").orderBy("valid_from")
+    val hist = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts").as("valid_from"),
+        floor(col("value") / 100).cast("long").as("tier"))
+      .withColumn("valid_to",
+        least(
+          coalesce(lead(col("valid_from"), 1).over(wNext),
+            col("valid_from") + expr("INTERVAL 7 DAYS")),
+          col("valid_from") + expr("INTERVAL 7 DAYS")))
+    val views = ev.filter(col("event_type") === "view").select("user_id", "ts")
+    NativeAsOfJoin.joinPointInTime(
+        views, hist, Seq("user_id"), "ts", "valid_from", "valid_to", Seq("tier"))
+      .groupBy(coalesce(col("pit_tier").cast("string"), lit("none")).as("tier"))
+      .agg(count(lit(1)).as("n_views"), countDistinct(col("user_id")).as("n_users"))
+      .orderBy("tier")
+  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -427,9 +497,9 @@ object RelationalQueries {
     QueryDef(
       "q_w4_asof_join", "W4 as-of join",
       // each purchase looks up the user's most recent view at-or-before
-      // it (backward as-of); DuckDB's native ASOF JOIN is the oracle.
-      // Gaps compare in exact microseconds; avg is an exact-int sum
-      // over a count, identical across engines.
+      // it (backward as-of on plans/NativeAsOfJoin); DuckDB's native
+      // ASOF JOIN is the oracle. Gaps compare in exact microseconds;
+      // avg is an exact-int sum over a count, identical across engines.
       Some("""WITH p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
              |v AS (SELECT user_id, ts FROM events WHERE event_type = 'view')
              |SELECT strftime(date_trunc('day', p.ts), '%Y-%m-%d') AS day,
@@ -437,19 +507,7 @@ object RelationalQueries {
              |round(avg(epoch_us(p.ts) - epoch_us(v.ts)) / 1e6, 6) AS avg_gap_sec
              |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND v.ts <= p.ts
              |GROUP BY 1 ORDER BY day""".stripMargin),
-      (s, dir) => {
-        val ev = Tables.events(s, dir)
-        val p = ev.filter(col("event_type") === "purchase").select("user_id", "ts")
-        val v = ev.filter(col("event_type") === "view").select("user_id", "ts")
-        graft.operators.AsOfJoin.joinAsOfBackward(
-            p, v, Seq("user_id"), "ts", "ts", Seq("ts"))
-          .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
-          .agg(count(lit(1)).as("n_purchases"),
-            count(col("asof_ts")).as("n_matched"),
-            round(avg(unix_micros(col("ts")) - unix_micros(col("asof_ts"))) / 1e6, 6)
-              .as("avg_gap_sec"))
-          .orderBy("day")
-      }),
+      purchaseViewGaps(_, _)),
 
     // ---------------------------------------------------------------- W4b (salted as-of join, hot-key-safe)
     QueryDef(
@@ -458,7 +516,7 @@ object RelationalQueries {
       // salt only changes the SHUFFLE LAYOUT (left rows scatter over
       // 8 sub-keys, right history replicated per sub-key), never the
       // answer. This is the shape that survives one user owning a
-      // data center's worth of events: the hot key's window work
+      // data center's worth of events: the hot key's sort-merge work
       // spreads over saltBuckets tasks instead of serializing in one.
       Some("""WITH p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
              |v AS (SELECT user_id, ts FROM events WHERE event_type = 'view')
@@ -467,28 +525,16 @@ object RelationalQueries {
              |round(avg(epoch_us(p.ts) - epoch_us(v.ts)) / 1e6, 6) AS avg_gap_sec
              |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND v.ts <= p.ts
              |GROUP BY 1 ORDER BY day""".stripMargin),
-      (s, dir) => {
-        val ev = Tables.events(s, dir)
-        val p = ev.filter(col("event_type") === "purchase").select("user_id", "ts")
-        val v = ev.filter(col("event_type") === "view").select("user_id", "ts")
-        graft.operators.AsOfJoin.joinAsOfBackwardSalted(
-            p, v, Seq("user_id"), "ts", "ts", Seq("ts"), saltBuckets = 8)
-          .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
-          .agg(count(lit(1)).as("n_purchases"),
-            count(col("asof_ts")).as("n_matched"),
-            round(avg(unix_micros(col("ts")) - unix_micros(col("asof_ts"))) / 1e6, 6)
-              .as("avg_gap_sec"))
-          .orderBy("day")
-      }),
+      purchaseViewGaps(_, _, saltBuckets = 8)),
 
     // ---------------------------------------------------------------- W4c (forward as-of join)
     QueryDef(
       "q_w4c_asof_forward", "W4 as-of join (forward / nearest-later)",
       // time-reversed twin of q_w4: each view looks up the user's NEXT
       // purchase at-or-after it ("did this impression convert, and how
-      // fast") — the attribution direction. Same one-shuffle running
-      // window, descending in time; DuckDB's ASOF with the inequality
-      // flipped is the oracle.
+      // fast") — the attribution direction. The native exec merges
+      // descending in time; DuckDB's ASOF with the inequality flipped
+      // is the oracle.
       Some("""WITH p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
              |v AS (SELECT user_id, ts FROM events WHERE event_type = 'view')
              |SELECT strftime(date_trunc('day', v.ts), '%Y-%m-%d') AS day,
@@ -496,29 +542,15 @@ object RelationalQueries {
              |round(avg(epoch_us(p.ts) - epoch_us(v.ts)) / 1e6, 6) AS avg_gap_sec
              |FROM v ASOF LEFT JOIN p ON v.user_id = p.user_id AND p.ts >= v.ts
              |GROUP BY 1 ORDER BY day""".stripMargin),
-      (s, dir) => {
-        val ev = Tables.events(s, dir)
-        val p = ev.filter(col("event_type") === "purchase").select("user_id", "ts")
-        val v = ev.filter(col("event_type") === "view").select("user_id", "ts")
-        graft.operators.AsOfJoin.joinAsOfForward(
-            v, p, Seq("user_id"), "ts", "ts", Seq("ts"))
-          .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
-          .agg(count(lit(1)).as("n_views"),
-            count(col("asof_ts")).as("n_converted"),
-            round(avg(unix_micros(col("asof_ts")) - unix_micros(col("ts"))) / 1e6, 6)
-              .as("avg_gap_sec"))
-          .orderBy("day")
-      }),
+      viewConversionGaps(_, _)),
 
     // ---------------------------------------------------------------- W4d (NATIVE as-of join: custom Catalyst operator)
     QueryDef(
       "q_w4d_asof_native", "W4 as-of join (native Catalyst operator)",
-      // q_w4's exact scenario and oracle, executed by the FIRST-CLASS
-      // operator (plans/NativeAsOfJoin: custom LogicalPlan →
-      // SparkStrategy → sort-merge AsOfJoinExec). Same answer as the
-      // union+window form — the physical algorithm is a streaming
-      // two-iterator merge per key partition with O(1) state, no
-      // union widening, no window buffer.
+      // q_w4's exact scenario, oracle and body: the registry name
+      // that introduced the native operator (plans/NativeAsOfJoin:
+      // custom LogicalPlan → SparkStrategy → sort-merge or broadcast
+      // exec), which every as-of query now runs on.
       Some("""WITH p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
              |v AS (SELECT user_id, ts FROM events WHERE event_type = 'view')
              |SELECT strftime(date_trunc('day', p.ts), '%Y-%m-%d') AS day,
@@ -526,25 +558,14 @@ object RelationalQueries {
              |round(avg(epoch_us(p.ts) - epoch_us(v.ts)) / 1e6, 6) AS avg_gap_sec
              |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND v.ts <= p.ts
              |GROUP BY 1 ORDER BY day""".stripMargin),
-      (s, dir) => {
-        val ev = Tables.events(s, dir)
-        val p = ev.filter(col("event_type") === "purchase").select("user_id", "ts")
-        val v = ev.filter(col("event_type") === "view").select("user_id", "ts")
-        graft.plans.NativeAsOfJoin.joinAsOfBackward(
-            p, v, Seq("user_id"), "ts", "ts", Seq("ts"))
-          .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
-          .agg(count(lit(1)).as("n_purchases"),
-            count(col("asof_ts")).as("n_matched"),
-            round(avg(unix_micros(col("ts")) - unix_micros(col("asof_ts"))) / 1e6, 6)
-              .as("avg_gap_sec"))
-          .orderBy("day")
-      }),
+      purchaseViewGaps(_, _)),
 
     // ---------------------------------------------------------------- W4e (native FORWARD as-of)
     QueryDef(
       "q_w4e_asof_native_fwd", "W4 forward as-of (native Catalyst operator)",
-      // q_w4c's attribution scenario on the native exec in forward
-      // mode (ts desc merge order, smallest later right row wins).
+      // q_w4c's attribution scenario, oracle and body (the native exec
+      // in forward mode: ts desc merge order, smallest later right row
+      // wins).
       Some("""WITH p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase'),
              |v AS (SELECT user_id, ts FROM events WHERE event_type = 'view')
              |SELECT strftime(date_trunc('day', v.ts), '%Y-%m-%d') AS day,
@@ -552,19 +573,7 @@ object RelationalQueries {
              |round(avg(epoch_us(p.ts) - epoch_us(v.ts)) / 1e6, 6) AS avg_gap_sec
              |FROM v ASOF LEFT JOIN p ON v.user_id = p.user_id AND p.ts >= v.ts
              |GROUP BY 1 ORDER BY day""".stripMargin),
-      (s, dir) => {
-        val ev = Tables.events(s, dir)
-        val p = ev.filter(col("event_type") === "purchase").select("user_id", "ts")
-        val v = ev.filter(col("event_type") === "view").select("user_id", "ts")
-        graft.plans.NativeAsOfJoin.joinAsOfForward(
-            v, p, Seq("user_id"), "ts", "ts", Seq("ts"))
-          .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
-          .agg(count(lit(1)).as("n_views"),
-            count(col("asof_ts")).as("n_converted"),
-            round(avg(unix_micros(col("asof_ts")) - unix_micros(col("ts"))) / 1e6, 6)
-              .as("avg_gap_sec"))
-          .orderBy("day")
-      }),
+      viewConversionGaps(_, _)),
 
     // ---------------------------------------------------------------- P9 (unpivot / melt)
     QueryDef(
@@ -856,31 +865,13 @@ object RelationalQueries {
              |SELECT coalesce(CAST(tier AS VARCHAR), 'none') AS tier,
              |count(*) AS n_views, count(DISTINCT user_id) AS n_users
              |FROM j GROUP BY 1 ORDER BY tier""".stripMargin),
-      (s, dir) => {
-        val ev = Tables.events(s, dir)
-        val wNext = Window.partitionBy("user_id").orderBy("valid_from")
-        val hist = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("ts").as("valid_from"),
-            floor(col("value") / 100).cast("long").as("tier"))
-          .withColumn("valid_to",
-            least(
-              coalesce(lead(col("valid_from"), 1).over(wNext),
-                col("valid_from") + expr("INTERVAL 7 DAYS")),
-              col("valid_from") + expr("INTERVAL 7 DAYS")))
-        val views = ev.filter(col("event_type") === "view").select("user_id", "ts")
-        graft.operators.AsOfJoin.joinPointInTime(
-            views, hist, Seq("user_id"), "ts", "valid_from", "valid_to", Seq("tier"))
-          .groupBy(coalesce(col("pit_tier").cast("string"), lit("none")).as("tier"))
-          .agg(count(lit(1)).as("n_views"), countDistinct(col("user_id")).as("n_users"))
-          .orderBy("tier")
-      }),
+      viewTiers(_, _)),
 
     // ---------------------------------------------------------------- J12b (point-in-time on the native exec)
     QueryDef(
       "q_j12b_pit_native", "J12 point-in-time lookup (native Catalyst operator)",
-      // q_j12's exact scenario and oracle on the native as-of exec —
-      // the validity-interval lookup rides NativeAsOfJoin plus the
-      // shared expiry-voiding step.
+      // q_j12's exact scenario, oracle and body — the validity-interval
+      // lookup rides NativeAsOfJoin plus its expiry-voiding step.
       Some("""WITH p AS (SELECT user_id, ts AS valid_from,
              |  CAST(floor(value / 100) AS BIGINT) AS tier,
              |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts) AS nxt
@@ -894,24 +885,7 @@ object RelationalQueries {
              |SELECT coalesce(CAST(tier AS VARCHAR), 'none') AS tier,
              |count(*) AS n_views, count(DISTINCT user_id) AS n_users
              |FROM j GROUP BY 1 ORDER BY tier""".stripMargin),
-      (s, dir) => {
-        val ev = Tables.events(s, dir)
-        val wNext = Window.partitionBy("user_id").orderBy("valid_from")
-        val hist = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("ts").as("valid_from"),
-            floor(col("value") / 100).cast("long").as("tier"))
-          .withColumn("valid_to",
-            least(
-              coalesce(lead(col("valid_from"), 1).over(wNext),
-                col("valid_from") + expr("INTERVAL 7 DAYS")),
-              col("valid_from") + expr("INTERVAL 7 DAYS")))
-        val views = ev.filter(col("event_type") === "view").select("user_id", "ts")
-        graft.plans.NativeAsOfJoin.joinPointInTime(
-            views, hist, Seq("user_id"), "ts", "valid_from", "valid_to", Seq("tier"))
-          .groupBy(coalesce(col("pit_tier").cast("string"), lit("none")).as("tier"))
-          .agg(count(lit(1)).as("n_views"), countDistinct(col("user_id")).as("n_users"))
-          .orderBy("tier")
-      }),
+      viewTiers(_, _)),
 
     // ---------------------------------------------------------------- O4/S6 (unionByName + anti-append)
     QueryDef(

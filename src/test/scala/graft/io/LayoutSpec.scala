@@ -145,4 +145,19 @@ class LayoutSpec extends AnyFunSuite {
       s"$tmp/data", "v", "key", mBits, k))
     assert(union == scratch, "union-of-deltas diverged from from-scratch build")
   }
+
+  test("manifests refuse k < 1 instead of emitting an empty manifest") {
+    import spark.implicits._
+    val tmp = "target/tmp/layoutspec_k0"
+    (0L until 10L).toDF("id").write.mode("overwrite").parquet(tmp)
+    // k = 0 probes per key: explode(array()) would drop every row and
+    // n_rows would divide by zero — both builders must refuse up front
+    val builds: Seq[() => Unit] = Seq(
+      () => Layout.bloomManifest(spark, tmp, "id", 64, 0).collect(),
+      () => Layout.statsManifest(spark, tmp, "id", "id", 64, 0).collect())
+    builds.foreach { build =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains("must be >= 1"), e.getMessage)
+    }
+  }
 }

@@ -1,6 +1,7 @@
 package graft.llm
 
 import graft.TestSpark
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 class PcaSpec extends AnyFunSuite {
@@ -53,5 +54,26 @@ class PcaSpec extends AnyFunSuite {
     val expect = new java.math.BigInteger(1, java.util.Arrays.copyOf(d, 8))
       .doubleValue() / math.pow(2.0, 63) - 1.0
     assert(Pca.pcInit(1) == expect)
+  }
+
+  test("topComponent refuses an empty corpus or a dim below the embedding width") {
+    import spark.implicits._
+    val emb = Seq((1L, Seq(1.0f, 2.0f, 3.0f)), (2L, Seq(2.0f, 1.0f, 0.0f)), (3L, Seq(0.0f, 1.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    val narrow = intercept[IllegalArgumentException](
+      Pca.topComponent(emb, "vec_id", "embedding", dim = 2, iters = 1))
+    assert(narrow.getMessage.contains("every index <= dim=2"), narrow.getMessage)
+    val empty = intercept[IllegalArgumentException](
+      Pca.topComponent(emb.filter(col("vec_id") < 0L), "vec_id", "embedding", dim = 3, iters = 1))
+    assert(empty.getMessage.contains("got 0 cells"), empty.getMessage)
+  }
+
+  test("an all-null embedding dimension fails with a legible message, not an NPE") {
+    import spark.implicits._
+    val emb = Seq((1L, Seq(Some(1.0f), None)), (2L, Seq(Some(2.0f), None)))
+      .toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](
+      Pca.covariance(emb, "vec_id", "embedding"))
+    assert(e.getMessage.contains("dimension 2 has no non-null values"), e.getMessage)
   }
 }

@@ -1,11 +1,38 @@
 package graft.operators
 
 import graft.TestSpark
+import graft.plans.NativeAsOfJoin
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+/** Hand-computed as-of cases against `plans.NativeAsOfJoin`, the one
+  * as-of join implementation.
+  */
 class AsOfJoinSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  /** Run `body` with session confs pinned, restoring them after. */
+  private def withConf[A](kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.get(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  /** One user (7) owns 90% of the left rows, the layout the unsalted
+    * sort-merge form puts into a single task; 100 cold users own the
+    * rest. Right side: 50 state changes for the hot user, one per cold.
+    */
+  private def hotKeyFrames(): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    def ts(m: Int) = new java.sql.Timestamp(base + m * 60000L)
+    val left = ((1 to 900).map(i => (7L, ts(i))) ++ (1 to 100).map(i => (i.toLong + 100, ts(i))))
+      .toDF("user_id", "ts")
+    val right = ((1 to 50).map(i => (7L, ts(i * 18), s"s$i")) ++
+      (1 to 100).map(i => (i.toLong + 100, ts(1), "z"))).toDF("user_id", "ts", "tag")
+    (left, right)
+  }
 
   test("backward as-of picks the greatest right ts at-or-before each left row") {
     import spark.implicits._
@@ -22,7 +49,7 @@ class AsOfJoinSpec extends AnyFunSuite {
       (1L, t("2024-01-01 11:00:00")), // after every left row; never matched
       (2L, t("2024-01-01 09:00:00")))
       .toDF("user_id", "ts")
-    val out = AsOfJoin.joinAsOfBackward(left, right, Seq("user_id"), "ts", "ts", Seq("ts"))
+    val out = NativeAsOfJoin.joinAsOfBackward(left, right, Seq("user_id"), "ts", "ts", Seq("ts"))
       .select("tag", "asof_ts").collect()
       .map(r => r.getString(0) -> Option(r.getTimestamp(1)).map(_.toString).orNull)
       .toMap
@@ -47,7 +74,7 @@ class AsOfJoinSpec extends AnyFunSuite {
       (1L, t("2024-01-01 10:30:00")),
       (1L, t("2024-01-01 11:00:00")))
       .toDF("user_id", "ts")
-    val out = AsOfJoin.joinAsOfForward(left, right, Seq("user_id"), "ts", "ts", Seq("ts"))
+    val out = NativeAsOfJoin.joinAsOfForward(left, right, Seq("user_id"), "ts", "ts", Seq("ts"))
       .select("tag", "asof_ts").collect()
       .map(r => r.getString(0) -> Option(r.getTimestamp(1)).map(_.toString).orNull)
       .toMap
@@ -74,7 +101,7 @@ class AsOfJoinSpec extends AnyFunSuite {
       (1L, t("2024-01-01 23:00:00"), "in-open-v3"),
       (1L, t("2024-01-01 08:00:00"), "before-all"))
       .toDF("user_id", "ts", "tag")
-    val out = AsOfJoin.joinPointInTime(
+    val out = NativeAsOfJoin.joinPointInTime(
         left, right, Seq("user_id"), "ts", "valid_from", "valid_to", Seq("ver"))
       .select("tag", "pit_ver").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
@@ -95,7 +122,7 @@ class AsOfJoinSpec extends AnyFunSuite {
     for (parts <- Seq(1, 3, 7); shift <- 0 until 3) {
       val right = (dupes.drop(shift) ++ dupes.take(shift))
         .toDF("user_id", "ts", "tag", "amount").repartition(parts)
-      val got = AsOfJoin.joinAsOfBackward(
+      val got = NativeAsOfJoin.joinAsOfBackward(
           left, right, Seq("user_id"), "ts", "ts", Seq("tag", "amount"))
         .select("asof_tag", "asof_amount").as[(String, Int)].collect().toSeq
       assert(got == Seq(("c", 30)), s"parts=$parts shift=$shift got=$got")
@@ -104,23 +131,16 @@ class AsOfJoinSpec extends AnyFunSuite {
 
   test("salted as-of matches unsalted on a planted hot key and spreads its tasks") {
     import spark.implicits._
-    // one user owns 90% of the left rows — the unsalted window would
-    // put all of them in a single task
-    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
-    def ts(m: Int) = new java.sql.Timestamp(base + m * 60000L)
-    val left = ((1 to 900).map(i => (7L, ts(i))) ++ (1 to 100).map(i => (i.toLong + 100, ts(i))))
-      .toDF("user_id", "ts")
-    val right = ((1 to 50).map(i => (7L, ts(i * 18), s"s$i")) ++
-      (1 to 100).map(i => (i.toLong + 100, ts(1), "z"))).toDF("user_id", "ts", "tag")
+    val (left, right) = hotKeyFrames()
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select("user_id", "ts", "asof_tag").as[(Long, java.sql.Timestamp, String)]
         .collect().sortBy(r => (r._1, r._2.getTime, r._3)).toSeq
-    val plain = AsOfJoin.joinAsOfBackward(left, right, Seq("user_id"), "ts", "ts", Seq("tag"))
-    val salted = AsOfJoin.joinAsOfBackwardSalted(
+    val plain = NativeAsOfJoin.joinAsOfBackward(left, right, Seq("user_id"), "ts", "ts", Seq("tag"))
+    val salted = NativeAsOfJoin.joinAsOfBackwardSalted(
       left, right, Seq("user_id"), "ts", "ts", Seq("tag"), saltBuckets = 8)
     assert(canon(salted) == canon(plain))
-    // the layout is genuinely salted: the window shuffle partitions by
-    // (user_id, __salt), so the hot key no longer maps to one task
+    // the layout is genuinely salted: the sort-merge form partitions
+    // by (user_id, __salt), so the hot key no longer maps to one task
     val p = salted.queryExecution.executedPlan.toString
     assert(p.contains("__salt"), s"salt column missing from plan:\n$p")
     val hotSalts = left.filter(col("user_id") === 7L)
@@ -130,17 +150,27 @@ class AsOfJoinSpec extends AnyFunSuite {
     assert(hotSalts >= 6, s"hot key only landed on $hotSalts of 8 salts")
   }
 
-  test("as-of plan shuffles once on the key and keeps a running window") {
-    import spark.implicits._
-    val left = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 1.0))
-      .toDF("user_id", "ts", "value")
-    val right = Seq((1L, java.sql.Timestamp.valueOf("2024-01-01 09:00:00")))
-      .toDF("user_id", "ts")
-    val plan = AsOfJoin.joinAsOfBackward(left, right, Seq("user_id"), "ts", "ts", Seq("ts"))
-      .queryExecution.executedPlan.toString
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges == 1, s"expected one key shuffle, plan:\n$plan")
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-      "as-of must not fall back to a product join")
+  test("salted sort-merge as-of spreads the hot key's left rows over the salt partitions") {
+    val (left, right) = hotKeyFrames()
+    // sort-merge form (no broadcast), one shuffle partition per salt
+    // bucket, AQE coalescing off so the partition ids stay physical
+    withConf(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      def hotPartitions(df: DataFrame): Long = {
+        val plan = df.queryExecution.executedPlan.toString
+        assert(plan.contains("AsOfJoin [") && !plan.contains("BroadcastAsOfJoin"), plan)
+        df.filter(col("user_id") === 7L)
+          .select(spark_partition_id().as("pid")).distinct().count()
+      }
+      val plain = NativeAsOfJoin.joinAsOfBackward(
+        left, right, Seq("user_id"), "ts", "ts", Seq("tag"))
+      val salted = NativeAsOfJoin.joinAsOfBackwardSalted(
+        left, right, Seq("user_id"), "ts", "ts", Seq("tag"), saltBuckets = 8)
+      assert(hotPartitions(plain) == 1L)
+      val n = hotPartitions(salted)
+      assert(n >= 6, s"hot key's left rows landed in only $n of 8 partitions")
+    }
   }
 }

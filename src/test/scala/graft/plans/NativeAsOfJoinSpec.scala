@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native Catalyst as-of operator against the composed
-  * union+window form (operators/AsOfJoin): identical contract, so the
+  * union+window form (ComposedAsOfJoin): identical contract, so the
   * two implementations must agree row for row on every input —
   * including the adversarial tie/no-match edges and the real events
   * table. q_w4d additionally pins it to DuckDB's native ASOF JOIN.
@@ -75,7 +75,7 @@ class NativeAsOfJoinSpec extends AnyFunSuite {
       .select("user_id", "ts", "value")
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("user_id", "ts", "asof_ts").collect().map(_.toString).toSeq
-    val composed = canon(graft.operators.AsOfJoin.joinAsOfBackward(
+    val composed = canon(ComposedAsOfJoin.join(
       p, v, Seq("user_id"), "ts", "ts", Seq("ts", "value")))
     for (threshold <- Seq("-1", "100MB")) withBroadcastThreshold(threshold) {
       val native = NativeAsOfJoin.joinAsOfBackward(
@@ -91,8 +91,8 @@ class NativeAsOfJoinSpec extends AnyFunSuite {
     val v = ev.filter(col("event_type") === "view").select("user_id", "ts", "value")
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("user_id", "ts", "asof_ts").collect().map(_.toString).toSeq
-    val composed = canon(graft.operators.AsOfJoin.joinAsOfForward(
-      p, v, Seq("user_id"), "ts", "ts", Seq("ts", "value")))
+    val composed = canon(ComposedAsOfJoin.join(
+      p, v, Seq("user_id"), "ts", "ts", Seq("ts", "value"), forward = true))
     for (threshold <- Seq("-1", "100MB")) withBroadcastThreshold(threshold) {
       val native = NativeAsOfJoin.joinAsOfForward(
         p, v, Seq("user_id"), "ts", "ts", Seq("ts", "value"))
@@ -138,7 +138,7 @@ class NativeAsOfJoinSpec extends AnyFunSuite {
     }
     assert(filtersAbove.isEmpty, opt.toString)
     // and the answer is the answer
-    val expect = graft.operators.AsOfJoin.joinAsOfBackward(
+    val expect = ComposedAsOfJoin.join(
       p.filter(col("user_id") < 500), v, Seq("user_id"), "ts", "ts", Seq("ts")).count()
     assert(joined.count() == expect)
   }
