@@ -46,6 +46,7 @@ object Bench {
     // f-interpolators delegate to String.format under the DEFAULT
     // locale; pin ROOT so no host locale can corrupt numeric output.
     java.util.Locale.setDefault(java.util.Locale.ROOT)
+    Registry.requireRegistered(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = SparkUtil.local()
     val sc = spark.sparkContext

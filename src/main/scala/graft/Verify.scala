@@ -11,6 +11,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional name filter: dump only these queries (selfcheck-style
     // subset iteration); no filter = the full registry
+    graft.queries.Registry.requireRegistered(args.drop(2).toSeq)
     val only = args.drop(2).toSet
     val spark = SparkUtil.local()
     val sc = spark.sparkContext

@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** F1 `normalize_salary` as a native Catalyst expression
   * (ref /root/reference/sql/stored_procedures.sql:6-105).
   *
-  * The pure-`when`/`regexp_extract` formulation (kept documented in
-  * SalaryFns) is semantically identical but inlines the 8-branch regex
+  * The pure-`when`/`regexp_extract` formulation (the test-side
+  * witness SalaryColumnChain) is semantically identical but inlines the 8-branch regex
   * chain once per struct-field access — measured at ~3.3 s of the
   * sf0.1 staging build, ~10× the cost of every other cleaning function
   * combined. This expression evaluates the chain exactly once per row

@@ -307,7 +307,7 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** Ground-truth hook for recall measurement (Scratch profile-recall):
+  /** Exact ground truth for recall measurement (q_l90_dedup_audit):
     * COMPLETE blocking with no doc-frequency cap — every pair with any
     * shared key meets the equi-join, and Jaccard is over the full
     * uncapped key sets, so the result is the exact pair set the
@@ -317,19 +317,6 @@ object Dedup {
   private[graft] def exactPairsUncapped(
       keyed: DataFrame, keyCol: String, threshold: Double): DataFrame =
     jaccardPairsViaBlocking(keyed, keyCol, threshold, Int.MaxValue)
-
-  /** Profiling hook: the winnow → cap → checkpoint stage on its own —
-    * the same `cappedKeyed` call the production pair generators make,
-    * so profile numbers cannot drift from the measured path.
-    */
-  private[graft] def winnowExplodedForProfile(
-      docs: DataFrame, idCol: String, textCol: String,
-      k: Int, w: Int, maxDocFreq: Int): DataFrame =
-    cappedKeyed(
-      spread(docs)
-        .select(col(idCol).as("__id"),
-          explode(TextAnalysis.winnowUdf(normalizeText(col(textCol)), lit(k), lit(w))).as("fp")),
-      "fp", maxDocFreq)
 
   /** MinHash/LSH near-duplicate pairs: banded bucketing → candidate
     * pairs → exact-Jaccard verification. `docs` needs (idCol, textCol).

@@ -34,38 +34,6 @@ object Pca {
     */
   private[llm] def pcInit(j: Int): Double = Similarity.md5Weight(s"pc:$j")
 
-  /** Top principal component after `iters` power steps:
-    * (j 1-based, loading, lambda) with the sign fixed so loading(1) ≥ 0
-    * and lambda = ‖C·v‖ of the final step (the Rayleigh estimate of
-    * the top eigenvalue once iterates align).
-    */
-  /** d×d covariance cells (ci, cj, cov), one corpus pass.
-    *
-    * r15 shape (guide §2.4, remove shuffles outright): the old form
-    * exploded every row to n·d (vec, j, x) rows, hash-repartitioned
-    * them by vec_id, broadcast-joined the per-dim means back per
-    * ELEMENT, and self-joined the centered rows to emit n·d² products
-    * — the corpus' exploded bytes crossed one full exchange and fed a
-    * join. But centering is per-row arithmetic once the d means are
-    * known, and the means are a |dim|-row aggregate: compute them
-    * first (one n·d pass, same DECIMAL(25,10)-sum/count expression —
-    * |dim| rows collected, bounded driver control flow like the
-    * epoch-planner input), embed them as an array LITERAL, and each
-    * row centers itself with zip_with and emits its outer products
-    * directly from a generator — no exchange, no join, map-side
-    * partial aggregation into at most d² cells. The only data-sized
-    * shuffle left is the d²-cell aggregation (tiny). The covariance
-    * matrix is also SYMMETRIC — round(a·b,10) ≡ round(b·a,10)
-    * bit-exactly and decimal addition is order-insensitive — so the
-    * generator emits only the lower triangle (cj ≤ ci, half the
-    * rounds/decimal adds) and the off-diagonal cells are mirrored
-    * after the aggregate, value-identical (the q_st17 argument).
-    *
-    * A single parquet file arrives as ONE partition and everything
-    * before the cell aggregation is narrow, so the scan is widened
-    * (widenByFiles — metadata-only, a no-op on a real many-file
-    * corpus) or the whole n·d² pass serializes into one task.
-    */
   /** The triangle kernel pre-checkpoint: per-row centering against the
     * means literal + generator outer product + d²-cell aggregation.
     * Public to `llm` so PlanSpec can pin the join-free single-pass
@@ -97,6 +65,33 @@ object Pca {
       .agg(sum(col("p")).as("sp"))
   }
 
+  /** d×d covariance cells (ci, cj, cov), one corpus pass.
+    *
+    * r15 shape (guide §2.4, remove shuffles outright): the old form
+    * exploded every row to n·d (vec, j, x) rows, hash-repartitioned
+    * them by vec_id, broadcast-joined the per-dim means back per
+    * ELEMENT, and self-joined the centered rows to emit n·d² products
+    * — the corpus' exploded bytes crossed one full exchange and fed a
+    * join. But centering is per-row arithmetic once the d means are
+    * known, and the means are a |dim|-row aggregate: compute them
+    * first (one n·d pass, same DECIMAL(25,10)-sum/count expression —
+    * |dim| rows collected, bounded driver control flow like the
+    * epoch-planner input), embed them as an array LITERAL, and each
+    * row centers itself with zip_with and emits its outer products
+    * directly from a generator — no exchange, no join, map-side
+    * partial aggregation into at most d² cells. The only data-sized
+    * shuffle left is the d²-cell aggregation (tiny). The covariance
+    * matrix is also SYMMETRIC — round(a·b,10) ≡ round(b·a,10)
+    * bit-exactly and decimal addition is order-insensitive — so the
+    * generator emits only the lower triangle (cj ≤ ci, half the
+    * rounds/decimal adds) and the off-diagonal cells are mirrored
+    * after the aggregate, value-identical (the q_st17 argument).
+    *
+    * A single parquet file arrives as ONE partition and everything
+    * before the cell aggregation is narrow, so the scan is widened
+    * (widenByFiles — metadata-only, a no-op on a real many-file
+    * corpus) or the whole n·d² pass serializes into one task.
+    */
   def covariance(
       emb: DataFrame, idCol: String, embCol: String): DataFrame = {
     val nFrame = emb.agg(count(lit(1)).as("n"))
@@ -114,19 +109,25 @@ object Pca {
         (col("sp").cast("double") / (col("n") - 1)).as("cov"))
   }
 
-  /** Top principal component with the power steps run DRIVER-SIDE over
-    * the collected d² cells (bounded: |dim|² rows — driver control
-    * flow, the mmrSelectLocal/epochMixPlanLocal pattern). The corpus
-    * pass (covariance) stays distributed; the iteration is d²-row
+  /** Top principal component after `iters` power steps:
+    * (j 1-based, loading, lambda) with the sign fixed so loading(1) ≥ 0
+    * and lambda = ‖C·v‖ of the final step (the Rayleigh estimate of
+    * the top eigenvalue once iterates align).
+    *
+    * The power steps run DRIVER-SIDE over the collected d² cells
+    * (bounded: |dim|² rows — driver control flow, the
+    * mmrSelectLocal/epochMixPlanLocal pattern). The corpus pass
+    * (covariance) stays distributed; the iteration is d²-row
     * arithmetic that previously cost ~3 broadcast/checkpoint job
     * floors per step. Arithmetic replicates the distributed loop
     * EXACTLY — round(x,12) = BigDecimal.valueOf(x).setScale(12,
     * HALF_UP) (Catalyst Round + the double→DECIMAL(28,12) cast),
     * decimal addition exact and order-insensitive, norms/divisions in
-    * IEEE double — and [[topComponentDistributed]] stays as the
-    * distributed twin, pinned bit-identical in PcaSpec. The final
-    * projection (sign fix, 6-dp rounds) still runs through the SAME
-    * Spark expressions, so output formatting shares one code path.
+    * IEEE double — and that loop is kept as the test-side witness
+    * `DistributedPca.topComponent`, pinned bit-identical in PcaSpec.
+    * The final projection (sign fix, 6-dp rounds) still runs through
+    * the SAME Spark expressions, so output formatting shares one code
+    * path.
     *
     * Contract (ADVICE r14 mmrSelectLocal note, applied here from the
     * start): `cells` must be the dense d×d grid with non-null doubles
@@ -177,49 +178,6 @@ object Pca {
       .select(col("j"),
         round(col("v") * lit(sgn), 6).as("loading"),
         round(lit(nrm), 6).as("lambda"))
-      .orderBy("j")
-  }
-
-  /** The distributed power-step loop — kept as the local twin's
-    * equivalence witness (PcaSpec pins topComponent ≡ this,
-    * bit-identical) and for fleets where even d² rows should not
-    * transit the driver.
-    */
-  private[graft] def topComponentDistributed(
-      emb: DataFrame, idCol: String, embCol: String, dim: Int, iters: Int): DataFrame = {
-    require(iters >= 1)
-    val spark = emb.sparkSession
-    val cov = covariance(emb, idCol, embCol)
-      .localCheckpoint(false) // read once per power step
-    import spark.implicits._
-    var v = (1 to dim).map(j => (j.toLong, pcInit(j))).toDF("j", "v")
-    var lambda: DataFrame = null
-    var it = 0
-    while (it < iters) {
-      // pin the d²-row kernel's OUTPUT: the norm aggregate, the
-      // normalized iterate, and (last step) the final select all read
-      // u — without the checkpoint each consumer re-runs the cov join
-      val u = cov
-        .join(broadcast(v), col("cj") === col("j"))
-        .select(col("ci"),
-          round(col("cov") * col("v"), 12).cast(DecimalType(28, 12)).as("p"))
-        .groupBy("ci")
-        .agg(sum(col("p")).cast("double").as("u"))
-        .localCheckpoint(false)
-      lambda = u.agg(
-        sqrt(sum(round(col("u") * col("u"), 12).cast(DecimalType(28, 12)))
-          .cast("double")).as("nrm"))
-      v = u.crossJoin(broadcast(lambda)) // 1 row: the norm
-        .select(col("ci").as("j"), (col("u") / col("nrm")).as("v"))
-      it += 1
-    }
-    val sgn = v.filter(col("j") === 1)
-      .select(when(col("v") < 0, -1.0).otherwise(1.0).as("sgn"))
-    v.crossJoin(broadcast(sgn)) // 1 row: sign convention
-      .crossJoin(broadcast(lambda)) // 1 row: top-eigenvalue estimate
-      .select(col("j").cast("long").as("j"),
-        round(col("v") * col("sgn"), 6).as("loading"),
-        round(col("nrm"), 6).as("lambda"))
       .orderBy("j")
   }
 }

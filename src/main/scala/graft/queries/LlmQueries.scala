@@ -3916,8 +3916,8 @@ object LlmQueries {
           .select("query_id", "cand_id", "rel", "__ce")
         // pool is 8 probes × top-10 = 80 rows by construction — the
         // driver-side greedy variant skips ~15 scheduling-floor jobs
-        // (bit-identical to mmrSelect; equivalence pinned in
-        // SimilaritySpec, hash re-proved vs the DuckDB oracle)
+        // (bit-identical to the distributed greedy loop; equivalence
+        // pinned in SimilaritySpec, hash re-proved vs the DuckDB oracle)
         Similarity.mmrSelectLocal(cand, "query_id", "cand_id", "rel", "__ce",
           steps = 4, lambdaNum = 7)
       }),

@@ -24,4 +24,15 @@ object Registry {
     * mapping for the cost of a few seconds of floor.
     */
   lazy val benchNames: Seq[String] = all.map(_.name)
+
+  /** Query-name arguments (Verify's and Bench's subset filters) must all
+    * be registered: a typo would otherwise select nothing and the run
+    * would succeed having checked or timed no query. Needs no
+    * SparkSession, so callers check before starting one.
+    */
+  def requireRegistered(names: Seq[String]): Unit = {
+    val unknown = names.filterNot(all.map(_.name).toSet).distinct
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.mkString(", ")} (${all.size} registered)")
+  }
 }

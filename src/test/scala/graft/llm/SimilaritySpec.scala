@@ -181,7 +181,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(perQ.nonEmpty, "probes must find negatives in their buckets at this SF")
   }
 
-  test("mmrSelect greedily trades relevance for diversity, ties break on id") {
+  test("mmrSelectLocal greedily trades relevance for diversity, ties break on id") {
     import spark.implicits._
     // candidates for one query: c10=(1,0) rel .9; c20=(.6,.8) rel .8
     // (cos .6 to c10, .8 to c30); c30=c31=(0,1) rel .7 (orthogonal to
@@ -195,7 +195,7 @@ class SimilaritySpec extends AnyFunSuite {
       (1L, 30L, BigDecimal("0.7"), Seq(0.0, 1.0)),
       (1L, 31L, BigDecimal("0.7"), Seq(0.0, 1.0))
     ).toDF("query_id", "cand_id", "rel", "emb")
-    val out = Similarity.mmrSelect(cand, "query_id", "cand_id", "rel", "emb",
+    val out = Similarity.mmrSelectLocal(cand, "query_id", "cand_id", "rel", "emb",
         steps = 3, lambdaNum = 7)
       .select("step", "cand_id", "max_sim", "mmr").collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
@@ -215,14 +215,14 @@ class SimilaritySpec extends AnyFunSuite {
         math.sin(q * 31 + c * 7 + i * 3).abs + 0.01 * i)
       (q, c * 10 + q, BigDecimal((0.95 - 0.07 * c).toString), emb)
     }).toDF("query_id", "cand_id", "rel", "emb")
-    val a = Similarity.mmrSelect(cand, "query_id", "cand_id", "rel", "emb",
+    val a = DistributedMmr.mmrSelect(cand, "query_id", "cand_id", "rel", "emb",
       steps = 4, lambdaNum = 7).collect().map(_.toSeq).toSeq
     val b = Similarity.mmrSelectLocal(cand, "query_id", "cand_id", "rel", "emb",
       steps = 4, lambdaNum = 7).collect().map(_.toSeq).toSeq
     assert(a == b, s"local/distributed MMR diverged:\n$a\n$b")
     // steps > pool: both stop at pool exhaustion identically
     val small = cand.filter($"cand_id" % 10 === 1 && $"query_id" === 1)
-    val a2 = Similarity.mmrSelect(small, "query_id", "cand_id", "rel", "emb",
+    val a2 = DistributedMmr.mmrSelect(small, "query_id", "cand_id", "rel", "emb",
       steps = 4).collect().map(_.toSeq).toSeq
     val b2 = Similarity.mmrSelectLocal(small, "query_id", "cand_id", "rel", "emb",
       steps = 4).collect().map(_.toSeq).toSeq

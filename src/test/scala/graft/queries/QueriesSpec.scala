@@ -18,6 +18,14 @@ class QueriesSpec extends AnyFunSuite {
     assert(Registry.benchNames.toSet.subsetOf(names.toSet))
   }
 
+  test("query-name arguments that name no registered query are rejected, listed") {
+    val e = intercept[IllegalArgumentException](Registry.requireRegistered(
+      Seq("q_typo", "q_j1_three_way_join", "q_other", "q_typo")))
+    assert(e.getMessage.contains("unknown query name(s): q_typo, q_other ("), e.getMessage)
+    Registry.requireRegistered(Seq("q_j1_three_way_join"))
+    Registry.requireRegistered(Seq.empty)
+  }
+
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -11,6 +11,10 @@ rule as the Spark side. DuckDB runs single-connection over the same
 parquet files the bench reads.
 
 Usage: python3 tools/oracle_walls.py <sfDir> <oracle_sql.json> [out] [passes]
+
+<oracle_sql.json> is the full registry's oracle map, which every
+graft.Verify run writes to its output directory, even a one-query run:
+  sbt "runMain graft.Verify <sfDir> <outDir> q_j1_three_way_join"
 """
 import sys, os, json, time
 import duckdb
